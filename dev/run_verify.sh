@@ -1,7 +1,7 @@
 #!/bin/bash
 # Compile, run graft.Verify on sf0.01, compare against the DuckDB oracle.
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 OUT="${2:-/tmp/graft_verify}"
 sbt -batch compile

@@ -66,10 +66,7 @@ object QueryCatalogDomain {
     * window on OUT_DT, IN_DT<=base). */
   val q61SowStatus: Q = (s, d) => {
     val twoYearsAgo = ymdD(BaseDate, 730)
-    val wkf = Fixtures.modonWkDf(s)
-      .filter(col("use_yn") === "Y" && col("wk_dt") <= BaseDate && col("wk_gubun") =!= "Z")
-    val last = LatestRecord.viaAgg(wkf, keys = Seq("farm_no", "pig_no"),
-        ord = Seq("wk_dt", "seq"))
+    val last = LatestWork.last(Fixtures.modonWkDf(s))
       .select(col("farm_no"), col("pig_no"), col("wk_dt").as("last_wk_dt_calc"),
         col("wk_gubun"), col("sago_gubun_cd"), col("daeri_yn"))
     Fixtures.modonDf(s)
@@ -469,20 +466,15 @@ object QueryCatalogDomain {
     * pregnant sows (latest work G, alive sentinel) -> mating+115;
     * lactating/foster (latest B) -> farrowing+21. */
   val q65ScheduleBmEu: Q = (s, d) =>
-    q65ScheduleBmEuFrom(s, Fixtures.modonDf(s), Fixtures.modonWkDf(s))
+    q65ScheduleBmEuFrom(s, Fixtures.modonDf(s), LatestWork.seqLatest(Fixtures.modonWkDf(s)))
 
   /** q65's body over caller-supplied source tables (see
-    * [[q62FarrowingFrom]]). */
+    * [[q62FarrowingFrom]]); `latest` is [[LatestWork.seqLatest]] over
+    * the caller's modon_wk. */
   private[graft] def q65ScheduleBmEuFrom(s: SparkSession, modonSrc: DataFrame,
-                                         modonWkSrc: DataFrame,
-                                         latestWk: Option[DataFrame] = None): DataFrame = {
+                                         latest: DataFrame): DataFrame = {
     val preg = 115; val wean = 21
     val md = modonSrc.filter(col("use_yn") === "Y" && col("out_dt") === Codes.AliveOutDt)
-    // latestWk: the report runner's shared seq-latest frame
-    // (WeeklyReportJob.sharedLatestWk); None computes inline.
-    val latest = latestWk.getOrElse(
-      LatestRecord.viaAgg(modonWkSrc.filter(col("use_yn") === "Y"),
-        keys = Seq("farm_no", "pig_no"), ord = Seq("seq")))
     // both reference branches in ONE pass over the latest-record
     // frame (the q64 fold rationale: the lazy bm/euB pair re-executed
     // the LatestRecord aggregation over the full modon_wk fact twice;

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.domain._
-import graft.ops.LatestRecord
 
 /** Domain queries, part 2: the remaining report sections. */
 object QueryCatalogDomain2 {
@@ -17,20 +16,11 @@ object QueryCatalogDomain2 {
   private def ymdD(base: String, minus: Int): String =
     java.time.LocalDate.parse(base, DateOps.Ymd).minusDays(minus).format(DateOps.Ymd)
 
-  /** q61's cohort + calc status, reused by q67. */
-  private def statusCohort(s: SparkSession): DataFrame =
-    statusCohortFrom(Fixtures.modonDf(s), Fixtures.modonWkDf(s))
-
-  private def statusCohortFrom(modonSrc: DataFrame, modonWkSrc: DataFrame,
-                               lastWk: Option[DataFrame] = None): DataFrame = {
+  /** q61's cohort + calc status over `lastWk` ([[LatestWork.last]]),
+    * reused by q67. */
+  private def statusCohortFrom(modonSrc: DataFrame, lastWk: DataFrame): DataFrame = {
     val twoYearsAgo = ymdD(BaseDate, 730)
-    val wkf = modonWkSrc
-      .filter(col("use_yn") === "Y" && col("wk_dt") <= BaseDate && col("wk_gubun") =!= "Z")
-    // lastWk: the report runner's shared latest-record frame
-    // (WeeklyReportJob.sharedLastWk — identical viaAgg over the
-    // identical filter); None computes inline.
-    val last = lastWk.getOrElse(LatestRecord.viaAgg(wkf,
-        keys = Seq("farm_no", "pig_no"), ord = Seq("wk_dt", "seq")))
+    val last = lastWk
       .select(col("farm_no"), col("pig_no"), col("wk_gubun"), col("sago_gubun_cd"),
         col("daeri_yn"), col("sancha").as("wk_sancha"))
     modonSrc
@@ -65,15 +55,15 @@ object QueryCatalogDomain2 {
     * emitted 0-filled (modon.py:32-43 PARITY_CONFIG, :107-136 label
     * rule incl. SANCHA-or-IN_SANCHA fallback, :150-195 status groups). */
   val q67ParityStatus: Q = (s, d) =>
-    parityStatusFrom(s, Fixtures.modonDf(s), Fixtures.modonWkDf(s))
+    parityStatusFrom(s, Fixtures.modonDf(s), LatestWork.last(Fixtures.modonWkDf(s)))
 
   /** q67's body over caller-supplied core tables (single-farm scoping
-    * contract — see cullingChunkedFrom). */
+    * contract — see cullingChunkedFrom); `lastWk` is
+    * [[LatestWork.last]] over the caller's modon_wk. */
   private[graft] def parityStatusFrom(s: SparkSession, modonSrc: DataFrame,
-                                      modonWkSrc: DataFrame,
-                                      lastWk: Option[DataFrame] = None): DataFrame = {
+                                      lastWk: DataFrame): DataFrame = {
     val parities = (1, "HUBO") +: (2 to 10).map(n => (n, if (n == 10) "P8UP" else s"P${n - 2}"))
-    val cohort = statusCohortFrom(modonSrc, modonWkSrc, lastWk)
+    val cohort = statusCohortFrom(modonSrc, lastWk)
       .withColumn("sancha_eff",
         when(col("wk_gubun").isNotNull,
           when(col("wk_sancha").isNotNull && col("wk_sancha") =!= 0, col("wk_sancha"))

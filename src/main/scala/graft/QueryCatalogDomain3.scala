@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.domain._
-import graft.ops.{LatestRecord, PrevNext}
+import graft.ops.PrevNext
 
 /** Domain queries, part 3: literal SEQ±1 semantics, the alert matrix,
   * and the config section's rearing rate. */
@@ -46,25 +46,18 @@ object QueryCatalogDomain3 {
     * overdue mating (weaned past return interval), bucketed
     * ~3/4-7/8-14/15+ into fixed columns. */
   val q75Alerts: Q = (s, d) =>
-    q75AlertsFrom(s, Fixtures.modonDf(s), Fixtures.modonWkDf(s))
+    q75AlertsFrom(s, Fixtures.modonDf(s), LatestWork.last(Fixtures.modonWkDf(s)))
 
   /** q75's body over caller-supplied source tables — the 50k-farm
     * scale run feeds parquet-backed facts through the SAME
-    * implementation the fixture hash gate verifies. */
+    * implementation the fixture hash gate verifies. `lastWk` is
+    * [[LatestWork.last]] over the caller's modon_wk. */
   private[graft] def q75AlertsFrom(s: SparkSession, modonSrc: DataFrame,
-                                   modonWkSrc: DataFrame,
-                                   lastWk: Option[DataFrame] = None): DataFrame = {
+                                   lastWk: DataFrame): DataFrame = {
     val base = DateOps.ymdToDate(lit(BaseDate))
     val alive = modonSrc
       .filter(col("use_yn") === "Y" && col("out_dt") === Codes.AliveOutDt)
-    // lastWk: the report runner's SHARED latest-record frame
-    // (WeeklyReportJob.sharedLastWk — the identical viaAgg over the
-    // identical filter), materialized once per report instead of once
-    // per section; None (every standalone caller) computes inline.
-    val last = lastWk.getOrElse(LatestRecord.viaAgg(
-      modonWkSrc
-        .filter(col("use_yn") === "Y" && col("wk_dt") <= BaseDate && col("wk_gubun") =!= "Z"),
-      keys = Seq("farm_no", "pig_no"), ord = Seq("wk_dt", "seq")))
+    val last = lastWk
       .select(col("farm_no"), col("pig_no"), col("wk_dt"), col("wk_gubun"),
         col("sago_gubun_cd"), col("daeri_yn"))
     val j = alive.join(last, Seq("farm_no", "pig_no"), "left")
@@ -511,9 +504,7 @@ object QueryCatalogDomain3 {
       "week_tw_vc" -> "150004")
     val conf = SchedulePlanner.parseConf(Fixtures.insConfDf(s), jobCols)
     val active = SchedulePlanner.activeTemplates(Fixtures.planModonDf(s), conf)
-    val latest = LatestRecord.viaAgg(
-      Fixtures.modonWkDf(s).filter(col("use_yn") === "Y"),
-      keys = Seq("farm_no", "pig_no"), ord = Seq("seq"))
+    val latest = LatestWork.seqLatest(Fixtures.modonWkDf(s))
       .select(col("farm_no"), col("pig_no"), col("wk_dt"), col("wk_gubun"),
         col("sago_gubun_cd"), col("daeri_yn"))
     val cohort = Fixtures.modonDf(s)
@@ -675,19 +666,16 @@ object QueryCatalogDomain3 {
     * overrides to 114, farm 2 is all-NULL — both branches land in the
     * verified output as visibly different dates. */
   val q83ConfigSchedule: Q = (s, _) => q83ConfigScheduleFrom(s,
-    Fixtures.modonDf(s), Fixtures.modonWkDf(s), Fixtures.farmConfigDf(s))
+    Fixtures.modonDf(s), LatestWork.seqLatest(Fixtures.modonWkDf(s)),
+    Fixtures.farmConfigDf(s))
 
   /** q83's body over caller-supplied source tables (see
-    * [[q75AlertsFrom]]). */
+    * [[q75AlertsFrom]]); `latestWk` is [[LatestWork.seqLatest]] over
+    * the caller's modon_wk. */
   private[graft] def q83ConfigScheduleFrom(s: SparkSession, modonSrc: DataFrame,
-                                           modonWkSrc: DataFrame,
-                                           farmConfigSrc: DataFrame,
-                                           latestWk: Option[DataFrame] = None): DataFrame = {
-    // latestWk: the report runner's shared seq-latest frame
-    // (WeeklyReportJob.sharedLatestWk); None computes inline.
-    val latest = latestWk.getOrElse(LatestRecord.viaAgg(
-      modonWkSrc.filter(col("use_yn") === "Y"),
-      keys = Seq("farm_no", "pig_no"), ord = Seq("seq")))
+                                           latestWk: DataFrame,
+                                           farmConfigSrc: DataFrame): DataFrame = {
+    val latest = latestWk
       .filter(col("wk_gubun") === "G")
       .select(col("farm_no"), col("pig_no"), col("wk_dt").as("mate_dt"))
     val alive = modonSrc

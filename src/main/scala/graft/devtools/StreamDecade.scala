@@ -6,10 +6,8 @@ import graft.core.Tables
 import graft.streaming.StreamingJobs
 
 /** Dev harness: the incremental-dedup STREAM end-to-end at the decade
-  * magnitude CompactScale proved for the store layout alone — the
-  * round-14 verdict task 5. CompactScale measured probe cost against
-  * a standing store built by direct writeBatch calls; this drives the
-  * REAL streaming product ([[StreamingJobs.nearDupStream]]: exact
+  * magnitude. Rather than probing a standing store built by direct
+  * writeBatch calls, this drives the REAL streaming product ([[StreamingJobs.nearDupStream]]: exact
   * in-batch dedup → bucketed band-store probe → Jaccard verification
   * → curated/store writes, bucketed table mode, compaction every
   * `compactEvery` batches INSIDE the stream) over the sf10 corpus'

@@ -2,6 +2,7 @@ package graft.devtools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.{QueryCatalogDomain, QueryCatalogDomain2, QueryCatalogDomain3}
+import graft.domain.LatestWork
 import graft.pipeline.WeeklyReportJob
 import graft.pipeline.WeeklyReportJob.DomainSources
 
@@ -37,16 +38,18 @@ object WeeklyScale {
   def queries(s: SparkSession, factsDir: String)
       : Seq[(String, DataFrame, String)] = {
     val src = DomainSources.parquet(s, factsDir)
+    val (lastWk, latestWk) =
+      (LatestWork.last(src.modonWk), LatestWork.seqLatest(src.modonWk))
     val pc = parquetClause(factsDir) _
     Seq(
       ("sub_config",
-        QueryCatalogDomain3.q83ConfigScheduleFrom(s, src.modon, src.modonWk, src.farmConfig),
+        QueryCatalogDomain3.q83ConfigScheduleFrom(s, src.modon, latestWk, src.farmConfig),
         QueryCatalogDomain3.q83SqlFrom(pc(Seq("modon", "modon_wk", "farm_config")))),
       ("sub_alert",
-        QueryCatalogDomain3.q75AlertsFrom(s, src.modon, src.modonWk),
+        QueryCatalogDomain3.q75AlertsFrom(s, src.modon, lastWk),
         QueryCatalogDomain3.q75SqlFrom(pc(Seq("modon", "modon_wk")))),
       ("sub_modon",
-        QueryCatalogDomain2.parityStatusFrom(s, src.modon, src.modonWk),
+        QueryCatalogDomain2.parityStatusFrom(s, src.modon, lastWk),
         QueryCatalogDomain2.q67SqlFrom(pc(Seq("modon", "modon_wk")))),
       ("sub_gb",
         QueryCatalogDomain2.returnBucketsFrom(s, src.modon, src.modonWk),
@@ -70,13 +73,13 @@ object WeeklyScale {
         QueryCatalogDomain.q64ScheduleMatingFrom(s, src.modon, src.modonWk),
         QueryCatalogDomain.q64SqlFrom(pc(Seq("modon", "modon_wk")))),
       ("sub_plan",
-        QueryCatalogDomain.q65ScheduleBmEuFrom(s, src.modon, src.modonWk),
+        QueryCatalogDomain.q65ScheduleBmEuFrom(s, src.modon, latestWk),
         QueryCatalogDomain.q65SqlFrom(pc(Seq("modon", "modon_wk")))),
       ("week_sub",
-        WeeklyReportJob.subRowsFrom(s, src),
+        WeeklyReportJob.subRowsFrom(s, src, lastWk, latestWk),
         QueryCatalogDomain3.q82SqlFrom(pc)),
       ("week_summary",
-        WeeklyReportJob.summaryFrom(s, src),
+        WeeklyReportJob.summaryFrom(s, src, lastWk, latestWk),
         QueryCatalogDomain3.q78SqlFrom(pc)))
   }
 

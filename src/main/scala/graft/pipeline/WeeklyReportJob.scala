@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryCatalogDomain, QueryCatalogDomain2, QueryCatalogDomain3}
-import graft.domain.DateOps
+import graft.domain.{DateOps, LatestWork}
+import graft.ops.Materialize
 import graft.sinks.Sinks
 
 /** The weekly report as ONE Spark job over all farms (SURVEY §3.1
@@ -72,56 +73,33 @@ object WeeklyReportJob {
     * conformed into the TS_INS_WEEK_SUB wide schema and unioned. Each
     * section is its own hash-verified query; the union re-verifies
     * the CONFORMANCE (padding, types, sort_no rules) via q82. */
-  def subRows(spark: SparkSession): DataFrame =
-    subRowsFrom(spark, DomainSources.fixtures(spark))
-
-  /** The latest-modon_wk frame shared by the ALERT and MODON (parity
-    * crosstab) sections — the (wk_dt ≤ BaseDate, wk_gubun ≠ 'Z')
-    * latest record per (farm_no, pig_no) both compute with an
-    * IDENTICAL viaAgg over an identical filter. Built here so the
-    * report runner can materialize it ONCE per report
-    * ([[graft.ops.Materialize.leafCache]]) and hand it to both
-    * sections instead of aggregating the full modon_wk fact per
-    * section (the plans show zero exchange reuse between the union's
-    * branches — 45 Exchanges, 0 ReusedExchange at r16 HEAD). */
-  def sharedLastWk(src: DomainSources): DataFrame =
-    graft.ops.LatestRecord.viaAgg(
-      src.modonWk.filter(col("use_yn") === "Y" &&
-        col("wk_dt") <= graft.domain.Fixtures.BaseDate &&
-        col("wk_gubun") =!= "Z"),
-      keys = Seq("farm_no", "pig_no"), ord = Seq("wk_dt", "seq"))
-
-  /** The seq-latest modon_wk frame shared by the CONFIG section and
-    * the summary's plan leg (q83/q65 — same viaAgg, use_yn-only
-    * filter, seq order). */
-  def sharedLatestWk(src: DomainSources): DataFrame =
-    graft.ops.LatestRecord.viaAgg(
-      src.modonWk.filter(col("use_yn") === "Y"),
-      keys = Seq("farm_no", "pig_no"), ord = Seq("seq"))
+  def subRows(spark: SparkSession): DataFrame = {
+    val src = DomainSources.fixtures(spark)
+    subRowsFrom(spark, src, LatestWork.last(src.modonWk),
+      LatestWork.seqLatest(src.modonWk))
+  }
 
   /** [[subRows]] over caller-supplied source tables — the identical
     * ten-section composition the fixture gate verifies, driven by the
     * scale harness over parquet-backed facts at 50k farms.
     *
-    * `lastWk` / `latestWk`: precomputed shared latest-record frames
-    * ([[sharedLastWk]]/[[sharedLatestWk]], normally leafCache'd by the
-    * caller — see [[runReport]]'s shareLatest); None (the default, and
-    * the declared q82/q120 form) keeps every section self-contained so
-    * a top-level farm predicate still pushes through the whole union
-    * to the scans. */
+    * `lastWk` / `latestWk` are [[LatestWork.last]] and
+    * [[LatestWork.seqLatest]] over `src.modonWk`: [[runReport]] passes
+    * them materialized; the declared q82/q120 form passes the
+    * un-materialized definitions, so a top-level farm predicate still
+    * pushes through the whole union to the scans. */
   def subRowsFrom(spark: SparkSession, src: DomainSources,
-                  lastWk: Option[DataFrame] = None,
-                  latestWk: Option[DataFrame] = None): DataFrame = {
+                  lastWk: DataFrame, latestWk: DataFrame): DataFrame = {
     def rnBy(ord: Column*): Column =
       row_number().over(Window.partitionBy(col("farm_no")).orderBy(ord: _*))
     val cfg = conform(QueryCatalogDomain3.q83ConfigScheduleFrom(spark,
-      src.modon, src.modonWk, src.farmConfig, latestWk), Map(
+      src.modon, latestWk, src.farmConfig), Map(
       "farm_no" -> col("farm_no"), "gubun" -> lit("CONFIG"), "sub_gubun" -> lit("SCHED"),
       "sort_no" -> rnBy(col("pig_no")), "code_1" -> col("pig_no"),
       "cnt_1" -> col("preg_used").cast("double"),
       "str_1" -> col("mate_dt"), "str_2" -> col("pass_dt")))
     val alert = conform(QueryCatalogDomain3.q75AlertsFrom(spark,
-      src.modon, src.modonWk, lastWk), Map(
+      src.modon, lastWk), Map(
       "farm_no" -> col("farm_no"), "gubun" -> lit("ALERT"), "sub_gubun" -> lit("MATRIX"),
       "sort_no" -> rnBy(col("alert_type")), "code_1" -> col("alert_type"),
       "cnt_1" -> col("d3").cast("double"), "cnt_2" -> col("d7").cast("double"),
@@ -160,7 +138,7 @@ object WeeklyReportJob {
       "sort_no" -> rnBy(col("pass_dt")), "code_1" -> DateOps.dateToYmd(col("pass_dt")),
       "cnt_1" -> col("n").cast("double")))
     val modon = modonConform(
-      QueryCatalogDomain2.parityStatusFrom(spark, src.modon, src.modonWk, lastWk))
+      QueryCatalogDomain2.parityStatusFrom(spark, src.modon, lastWk))
     val gbChart = gbConform(
       QueryCatalogDomain2.returnBucketsFrom(spark, src.modon, src.modonWk))
     val dopeList = dopeConform(QueryCatalogDomain2.cullingChunkedFrom(src.modon))
@@ -215,7 +193,7 @@ object WeeklyReportJob {
     def scoped(df: DataFrame): DataFrame = df.filter(col("farm_no") === farmNo)
     val (m, w) = (scoped(modon), scoped(modonWk))
     Seq(
-      modonConform(QueryCatalogDomain2.parityStatusFrom(spark, m, w)),
+      modonConform(QueryCatalogDomain2.parityStatusFrom(spark, m, LatestWork.last(w))),
       gbConform(QueryCatalogDomain2.returnBucketsFrom(spark, m, w)),
       dopeConform(QueryCatalogDomain2.cullingChunkedFrom(m)),
       shipConform(QueryCatalogDomain2.shipmentDailyFrom(spark, scoped(lpd))))
@@ -227,14 +205,16 @@ object WeeklyReportJob {
     * base.py:148-178; processor set async_processor.py:170-192).
     * Count columns coalesce to 0 for farms a section never saw;
     * averages stay NULL (the reference's NULL-vs-0 distinction). */
-  def summary(spark: SparkSession): DataFrame =
-    summaryFrom(spark, DomainSources.fixtures(spark))
+  def summary(spark: SparkSession): DataFrame = {
+    val src = DomainSources.fixtures(spark)
+    summaryFrom(spark, src, LatestWork.last(src.modonWk),
+      LatestWork.seqLatest(src.modonWk))
+  }
 
   /** [[summary]] over caller-supplied source tables (see
-    * [[subRowsFrom]], including the shared latest-frame params). */
+    * [[subRowsFrom]], including the latest-record frame params). */
   def summaryFrom(spark: SparkSession, src: DomainSources,
-                  lastWk: Option[DataFrame] = None,
-                  latestWk: Option[DataFrame] = None): DataFrame = {
+                  lastWk: DataFrame, latestWk: DataFrame): DataFrame = {
     val bm = QueryCatalogDomain.q62FarrowingFrom(spark, src.bunman, src.trans)
       .select(col("farm_no"), col("total_cnt").as("bm_cnt"),
         col("sum_live").as("bm_live"), col("avg_live").as("bm_avg_live"),
@@ -243,7 +223,7 @@ object WeeklyReportJob {
         src.eu, src.trans)
       .select(col("farm_no"), col("total_cnt").as("eu_cnt"),
         col("sum_eudusu").as("eu_dusu"), col("avg_pougigan").as("eu_avg_days"))
-    val sow = QueryCatalogDomain2.parityStatusFrom(spark, src.modon, src.modonWk, lastWk)
+    val sow = QueryCatalogDomain2.parityStatusFrom(spark, src.modon, lastWk)
       .groupBy("farm_no")
       .agg(sum(col("hubo") + col("imsin") + col("poyu") + col("eumo") + col("sago"))
         .cast("long").as("sow_total"))
@@ -251,7 +231,7 @@ object WeeklyReportJob {
       .groupBy("farm_no").agg(sum(col("cnt")).cast("long").as("gb_return_cnt"))
     val sched = QueryCatalogDomain.q64ScheduleMatingFrom(spark, src.modon, src.modonWk)
       .groupBy("farm_no").agg(sum(col("n")).cast("long").as("gb_plan"))
-    val alert = QueryCatalogDomain3.q75AlertsFrom(spark, src.modon, src.modonWk, lastWk)
+    val alert = QueryCatalogDomain3.q75AlertsFrom(spark, src.modon, lastWk)
       .groupBy("farm_no")
       .agg(sum(col("d3") + col("d7") + col("d14") + col("d15up"))
         .cast("long").as("alert_cnt"))
@@ -268,10 +248,9 @@ object WeeklyReportJob {
     val ship = QueryCatalogDomain2.shipmentDailyFrom(spark, src.lpd)
       .groupBy("farm_no").agg(sum(col("cnt")).cast("long").as("ship_cnt"))
     val cfg = QueryCatalogDomain3.q83ConfigScheduleFrom(spark, src.modon,
-        src.modonWk, src.farmConfig, latestWk)
+        latestWk, src.farmConfig)
       .groupBy("farm_no").agg(count(lit(1)).as("cfg_sched_cnt"))
-    val plan = QueryCatalogDomain.q65ScheduleBmEuFrom(spark, src.modon,
-        src.modonWk, latestWk)
+    val plan = QueryCatalogDomain.q65ScheduleBmEuFrom(spark, src.modon, latestWk)
       .groupBy("farm_no").agg(sum(col("n")).cast("long").as("plan_cnt"))
     def z(c: String): Column = coalesce(col(c), lit(0L)).as(c)
     Seq(bm, eu, gbRet, sched, alert, cull, acc, ship, cfg, plan)
@@ -362,50 +341,35 @@ object WeeklyReportJob {
 
   /** [[run]] over caller-supplied sources — the deployment entry for
     * the full weekly product (both compositions over one source
-    * bundle).
-    *
-    * `cacheHotFacts = true` wraps the configuration the round-15
-    * leafCache A/B measured as the composed-product win: `modon` and
-    * `modon_wk` — the two fact frames nearly every section scans, ~10
-    * scans of modon_wk per report run — are materialized ONCE
-    * ([[graft.ops.Materialize.leafCache]]) and released when both
-    * writes finish. Measured at 50k farms: sub_sched −73% and
-    * week_sub −32% inside the composition, but SINGLE-scan sections
-    * pay the full-width read without amortizing (sub_plan ran +66%
-    * WORSE standalone) — which is why this is an opt-in on the
-    * composed report runner, not a default inside the sections.
-    * Results are digest-identical either way (the A/B gate +
-    * WeeklyReportJobSpec pin it). Cluster durability caveat: leafCache
-    * is localCheckpoint — see [[graft.ops.Materialize]]. */
-  /** `shareLatest = true` additionally materializes the two shared
-    * latest-modon_wk frames ONCE for the whole report
-    * ([[sharedLastWk]]/[[sharedLatestWk]] via leafCache) and hands
-    * them to the four sections that otherwise each re-aggregate the
-    * full modon_wk fact (ALERT + MODON in the SUB rows; those two
-    * plus CONFIG + plan in the summary) — released with the hot-fact
-    * caches when both writes finish. Digest-identical either way
-    * (WeeklyDecade sharedlatest= A/B gates it). */
-  def runReport(spark: SparkSession, src: DomainSources, outDir: String,
-                cacheHotFacts: Boolean = false,
-                shareLatest: Boolean = false): Unit = {
-    val (eff, cached0) =
-      if (cacheHotFacts) {
-        val m = graft.ops.Materialize.leafCache(src.modon)
-        val w = graft.ops.Materialize.leafCache(src.modonWk)
-        (src.copy(modon = m, modonWk = w), Seq(m, w))
-      } else (src, Seq.empty[DataFrame])
-    val (lastWk, latestWk, cached) =
-      if (shareLatest) {
-        val a = graft.ops.Materialize.leafCache(sharedLastWk(eff))
-        val b = graft.ops.Materialize.leafCache(sharedLatestWk(eff))
-        (Some(a), Some(b), cached0 ++ Seq(a, b))
-      } else (None, None, cached0)
+    * bundle). The two hot facts, `modon` and `modon_wk` (about ten
+    * scans of modon_wk per report otherwise), and the two latest-record
+    * frames over the cached modon_wk ([[LatestWork.last]], read by ALERT
+    * and MODON; [[LatestWork.seqLatest]], read by CONFIG and the plan
+    * leg) are each materialized ONCE ([[Materialize.leafCache]]),
+    * handed to both compositions, and released when the writes finish
+    * or fail. Measured: caching the hot facts cut sub_sched −73% and
+    * week_sub −32% at 50k farms (r15); sharing the latest-record
+    * frames, which the union's branches never exchange-reuse, made
+    * week_summary 1.89× faster at 500k farms (r17). The written rows
+    * equal the un-materialized composition's (WeeklyReportJobSpec).
+    * Cluster durability caveat: leafCache is localCheckpoint — see
+    * [[Materialize]]. */
+  def runReport(spark: SparkSession, src: DomainSources, outDir: String): Unit = {
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def keep(df: DataFrame): DataFrame = {
+      val c = Materialize.leafCache(df)
+      cached += c
+      c
+    }
     try {
-      Sinks.overwritePartitions(subRowsFrom(spark, eff, lastWk, latestWk),
+      val hot = src.copy(modon = keep(src.modon), modonWk = keep(src.modonWk))
+      val lastWk = keep(LatestWork.last(hot.modonWk))
+      val latestWk = keep(LatestWork.seqLatest(hot.modonWk))
+      Sinks.overwritePartitions(subRowsFrom(spark, hot, lastWk, latestWk),
         s"$outDir/week_sub", Seq("gubun"))
-      summaryFrom(spark, eff, lastWk, latestWk).write.mode("overwrite")
+      summaryFrom(spark, hot, lastWk, latestWk).write.mode("overwrite")
         .parquet(s"$outDir/week_summary")
-    } finally cached.foreach(graft.ops.Materialize.release)
+    } finally cached.foreach(Materialize.release)
   }
 
   /** ONE chained week step: compute week `wn`'s per-farm farrowing
@@ -427,10 +391,9 @@ object WeeklyReportJob {
       outDir, wn, lo, hi, prevPath)
   }
 
-  /** [[runWeekStep]] parameterized over the event/farm frames — the
-    * scale harness (devtools.CrossCheckWeekly drives the same chain
-    * over an sf1-derived 6M-event corpus) and any caller whose farm
-    * events do not come from the domain fixtures. `b` rows carry
+  /** [[runWeekStep]] parameterized over the event/farm frames — for
+    * any caller whose farm events do not come from the domain
+    * fixtures, such as a scale corpus. `b` rows carry
     * (farm_no, wk_dt, silsan); `farms` is the reporting spine (farms
     * with no events that week report zeros). */
   def runWeekStepFrom(spark: SparkSession, b: DataFrame, farms: DataFrame,

@@ -8,10 +8,4 @@ package org.apache.spark
 object GraftMetricsBridge {
   def waitUntilListenerBusEmpty(sc: SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
-
-  /** In-memory size of a driver-side object graph
-    * (org.apache.spark.util.SizeEstimator is private[spark]) — the
-    * ShardBytesProbe uses it to weigh broadcast payloads. */
-  def estimateSize(obj: AnyRef): Long =
-    org.apache.spark.util.SizeEstimator.estimate(obj)
 }
